@@ -35,7 +35,7 @@ def entry(spark: SparkSession) -> DataFrame:
         F.col("doc_id").cast("string").alias("doc_id"),
         F.col("text").alias("content"),
     )
-    normalized, _ = transform_documents(spark, docs, with_report=False)
+    normalized = transform_documents(spark, docs)
     by_type = normalized.groupBy("type").agg(F.count(F.lit(1)).alias("n_records"))
     total = by_type.agg(F.sum("n_records").alias("total_items"))
     return by_type.crossJoin(F.broadcast(total))

@@ -258,7 +258,7 @@ def _doc_pipeline(spark, sf_dir):
         F.col("doc_id").cast("string").alias("doc_id"),
         F.col("text").alias("content"),
     )
-    normalized, _ = transform_documents(spark, docs, with_report=False)
+    normalized = transform_documents(spark, docs)
     return normalized.groupBy("type").agg(F.count(F.lit(1)).alias("n_records"))
 
 

@@ -7,9 +7,12 @@ serialization (NaN→null, lists passed through, app.py:100-121) → response
 
 The HTTP framing itself is out of engine scope (SURVEY.md §7 non-goals);
 ``process_payload`` is the complete handler body, callable from any web
-layer.  Unlike the reference it is driver-light: the only collected object
-is the final normalized table of ONE payload (bounded by payload size, the
-same object the reference holds in pandas), not any intermediate.
+layer.  It runs the pipeline once, through ``run_batch``: the ordered rows
+are collected inside the run, while its one persisted frame is still
+cached, and the type tags are read from the output schema alone, which
+starts no job.  Unlike the reference it is driver-light: the only collected
+object is the final normalized table of ONE payload (bounded by payload
+size, the same object the reference holds in pandas), not any intermediate.
 """
 
 from __future__ import annotations
@@ -46,11 +49,10 @@ def process_payload(spark: SparkSession, payload: str) -> dict[str, Any]:
     if payload is None or not payload.strip():
         return {"success": False, "error": "Empty input data"}
     result = run_batch(spark, payloads=[payload])
-    table = sorted_output(result["normalized"])
-    types = frontend_type_tags(table)
+    types = frontend_type_tags(sorted_output(result["normalized"]))
     data = [
         {k: _json_safe(v) for k, v in row.asDict(recursive=True).items()}
-        for row in table.collect()
+        for row in result["rows"]
     ]
     return {
         "success": True,

@@ -288,7 +288,7 @@ def extract_records(
 ) -> dict[str, DataFrame]:
     """E11: per-kind record DataFrames in the fixed kind order.
 
-    Returned as a dict (html → json → text → media) so ``normalize`` can
+    Returned as a dict (html → json → text → media) so the pipeline can
     union them in order; each frame carries the engine columns ``type``,
     ``source_index``, ``ordinal`` plus kind-specific fields.
     """

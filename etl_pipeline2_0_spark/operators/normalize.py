@@ -25,7 +25,7 @@ Scale notes:
   combine), and the join broadcasts one row.
 - Deliberately NOT reproduced: the reference's cross-file record-accumulation
   bug (etl_pipeline.py:26 list never cleared across runs — SURVEY.md §2.9);
-  each ``normalize`` call is a pure function of its inputs.
+  each ``normalize_union`` call is a pure function of its inputs.
 """
 
 from __future__ import annotations
@@ -66,48 +66,21 @@ def kind_rank(col):
     return F.array_position(order, col)
 
 
-def normalize(
-    per_kind: dict[str, DataFrame],
-    per_document: bool = False,
-    keep_provenance: bool = False,
-) -> DataFrame:
-    """P1 → U1 → W1 → F9 → O1/P3: the reference's ``normalize`` stage.
+def normalize_union(unioned: DataFrame, per_document: bool = False) -> DataFrame:
+    """P1 → W1 → F9 → O1/P3: the reference's ``normalize`` stage over the
+    union-by-name (U1) of the per-kind record frames.
 
-    Takes the per-kind record frames from ``extract_records`` and produces
-    the single rectangular table with universal columns ``type``,
-    ``source_index``, ``total_items`` and lexicographically-sorted data
-    columns.  Output row order is only meaningful via the ``_kind_rank`` /
-    ``ordinal`` sort keys (Spark tables are unordered); ``sorted_output``
-    applies the reference's display ordering when a deterministic order is
-    required (demo CSV, goldens).
+    Produces the single rectangular table with the provenance columns
+    ``doc_id``, ``ordinal``, universal columns ``type``, ``source_index``,
+    ``total_items`` and lexicographically-sorted data columns.  The P1
+    artifact columns are dropped after the union, so the schema report can
+    read the same pre-drop frame (dropping an absent column is a no-op).
+    Output row order is only meaningful via the
+    ``_kind_rank`` / ``ordinal`` sort keys (Spark tables are unordered);
+    ``sorted_output`` applies the reference's display ordering when a
+    deterministic order is required (demo CSV, goldens).
     """
-    # fixed order html→json→text→media (U1); P1 drop applied per-frame
-    frames = [per_kind[kind].drop(*ARTIFACT_COLUMNS) for kind in KIND_ORDER]
-    return normalize_union(
-        union_by_name(frames),
-        per_document=per_document,
-        keep_provenance=keep_provenance,
-        pre_drop=False,
-    )
-
-
-def normalize_union(
-    unioned: DataFrame,
-    per_document: bool = False,
-    keep_provenance: bool = False,
-    pre_drop: bool = True,
-) -> DataFrame:
-    """``normalize`` over an already-unioned frame.
-
-    Lets multi-action callers (``run_batch``) persist ONE frame — the
-    pre-drop union the schema report also reads — and derive everything
-    downstream from the cache instead of re-running detect+extract per
-    action.  Dropping the P1 artifact columns before or after the
-    union-by-name is equivalent (missing columns are null-filled either
-    way), which is what makes the shared frame possible.
-    """
-    if pre_drop:
-        unioned = unioned.drop(*ARTIFACT_COLUMNS)  # P1
+    unioned = unioned.drop(*ARTIFACT_COLUMNS)  # P1
     with_total = with_total_items(unioned, per_document=per_document)
     # F9: total_items coerced to bigint, nulls → 0 (try_cast ≡ errors='coerce')
     with_total = with_total.withColumn(
@@ -118,14 +91,17 @@ def normalize_union(
         for c in with_total.columns
         if c not in set(CORE_COLUMNS) | {"doc_id", "ordinal"}
     )  # P3: lexicographic data columns
-    provenance = [c for c in ("doc_id", "ordinal") if keep_provenance]
-    return with_total.select(*provenance, *CORE_COLUMNS, *rest)
+    # Backticks: a flattened JSON key may contain a dot (``user.id``), which
+    # an unquoted name would resolve as a struct path.
+    return with_total.select(
+        *[F.col(f"`{c}`") for c in ("doc_id", "ordinal", *CORE_COLUMNS, *rest)]
+    )
 
 
 def sorted_output(normalized: DataFrame) -> DataFrame:
     """O1 display ordering: kind order, then per-kind detection ordinal.
 
-    Requires ``keep_provenance=True`` output (needs ``ordinal``).
+    Drops the provenance columns ``doc_id`` and ``ordinal``.
     """
     return normalized.orderBy(
         "doc_id", kind_rank(F.col("type")), F.col("ordinal")

@@ -8,9 +8,9 @@ payload) arrives as ONE partition and serializes the whole pipeline onto a
 single core — profiled 30× slower than the same query at sf0.1.
 
 ``ensure_min_parallelism`` widens only when the scan is narrower than the
-requested parallelism, so it never inserts a wasteful full-data shuffle on a
-well-partitioned source, and when it does shuffle, that is precisely the
-case where redistributing the data is worth one exchange.
+cluster's default parallelism, so it never inserts a wasteful full-data
+shuffle on a well-partitioned source, and when it does shuffle, that is
+precisely the case where redistributing the data is worth one exchange.
 """
 
 from __future__ import annotations
@@ -18,11 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def ensure_min_parallelism(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Round-robin repartition to ``target`` (default: cluster parallelism)
-    iff the current plan would execute in fewer partitions than that."""
-    sc = df.sparkSession.sparkContext
-    target = target or sc.defaultParallelism
+def ensure_min_parallelism(df: DataFrame) -> DataFrame:
+    """Round-robin repartition to cluster parallelism iff the current plan
+    would execute in fewer partitions than that."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -7,9 +7,11 @@ columns are dropped (etl_pipeline.py:227-230 runs after 197-218), so
 ``title``/``word_count`` appear in the schema file but not the output table —
 a quirk we reproduce.
 
-Spark-first design: one aggregate pass over the pre-drop union —
-``count(col)`` per column for ``present_in``, ``count(*) > count(col)`` for
-``nullable``; map-side partial aggregation, a single 1-row result collected.
+Spark-first design: one aggregate pass over the pre-drop union, grouped by
+``type`` — ``count(col)`` per column for ``present_in``, ``count(*) >
+count(col)`` for ``nullable``, ``count(*)`` per group for the reference's
+``items_by_type`` (A2); map-side partial aggregation, one row per record kind
+collected.
 
 Documented divergence (SURVEY.md §7 wrinkle 4 + §1.2): the reference records
 the multiset of Python runtime types per field (a field seen as both ``int``
@@ -55,28 +57,31 @@ def _python_type_name(dt: T.DataType) -> str:
 
 def infer_schema_report(
     pre_drop_union: DataFrame, exclude: tuple[str, ...] = ("doc_id", "ordinal")
-) -> dict[str, dict[str, Any]]:
-    """A4: per-field ``{'type': [...], 'nullable': bool, 'present_in': int}``.
+) -> tuple[dict[str, dict[str, Any]], dict[str, int]]:
+    """A4: per-field ``{'type': [...], 'nullable': bool, 'present_in': int}``,
+    and the A2 per-type record counts (``items_by_type``).
 
     ``pre_drop_union`` is the union of the per-kind record frames *before*
     the P1 artifact drop, matching the reference's computation point.
-    One aggregation job; the result is tiny (one row) and driver-safe.
+    One aggregation job grouped by ``type``; the result is one small row per
+    record kind, summed on the driver.
     """
     fields = [f for f in pre_drop_union.schema.fields if f.name not in exclude]
     aggs = [F.count(F.lit(1)).alias("__total")]
-    for f in fields:
-        aggs.append(F.count(F.col(f"`{f.name}`")).alias(f"p__{f.name}"))
-    row = pre_drop_union.agg(*aggs).first()
-    total = row["__total"]
+    for i, f in enumerate(fields):
+        aggs.append(F.count(F.col(f"`{f.name}`")).alias(f"p__{i}"))
+    rows = pre_drop_union.groupBy("type").agg(*aggs).collect()
+    items_by_type = {r["type"]: r["__total"] for r in rows}
+    total = sum(items_by_type.values())
     report: dict[str, dict[str, Any]] = {}
-    for f in fields:
-        present = row[f"p__{f.name}"]
+    for i, f in enumerate(fields):
+        present = sum(r[f"p__{i}"] for r in rows)
         report[f.name] = {
             "type": [_python_type_name(f.dataType)],
             "nullable": present < total,
             "present_in": present,
         }
-    return report
+    return report, items_by_type
 
 
 def frontend_type_tags(df: DataFrame) -> dict[str, str]:

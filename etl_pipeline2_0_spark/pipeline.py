@@ -1,9 +1,19 @@
 """The end-to-end pipeline (reference ``ETLPipeline.run``, etl_pipeline.py:382-430).
 
-Five stages, as one lazily-built DataFrame DAG per sink action:
-
   read (S1/S2) → detect (E1–E5) → extract (E6–E11) → schema report (A4)
   → normalize (P1–P3, U1, W1) → load (S5–S8)
+
+Every caller goes through one detect → extract → union-by-name chain
+(``_extracted``), in one of two forms:
+
+- ``transform_documents`` is the lazy form for plan callers (registry
+  queries, ``entry``, ``bench.py``): it returns the normalized frame and runs
+  no action, so the caller's own action plans the whole chain.
+- ``run_batch`` is the materialized form for the CLI, the HTTP API and watch
+  mode.  It owns the run's one persisted frame, the pre-drop union: the
+  schema report with its per-type counts, the ordered rows or the sinks all
+  read that cache, and every one of those actions finishes before
+  ``run_batch`` unpersists it.
 
 Unlike the reference (eager, single-threaded, one file at a time), every
 stage here is a DataFrame transform over a *corpus* — one job processes a
@@ -15,13 +25,13 @@ from __future__ import annotations
 from datetime import datetime, timezone
 from typing import Any
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_pipeline2_0_spark.operators.detect import detect_blocks
 from etl_pipeline2_0_spark.operators.extract import KIND_ORDER, extract_records
 from etl_pipeline2_0_spark.operators.partitioning import ensure_min_parallelism
 from etl_pipeline2_0_spark.operators.normalize import (
-    normalize,
     normalize_union,
     sorted_output,
     union_by_name,
@@ -34,31 +44,26 @@ from etl_pipeline2_0_spark.sources.documents import (
 )
 
 
-def transform_documents(
-    spark: SparkSession,
-    docs: DataFrame,
-    per_document: bool = False,
-    with_report: bool = True,
-    infer_max_bodies: int | None = None,
-) -> tuple[DataFrame, dict[str, Any] | None]:
-    """detect → extract → schema report → normalize, no sinks.
-
-    Returns (normalized table with provenance columns, schema report).
-
-    ``with_report=False`` skips the A4 schema report — the report is an
-    EAGER aggregation (one full pipeline execution), so query paths that
-    only need the normalized table should opt out and keep the whole thing
-    one lazy DAG.
-    """
-    docs = ensure_min_parallelism(docs)
+def _extracted(
+    spark: SparkSession, docs: DataFrame, infer_max_bodies: int | None = None
+) -> DataFrame:
+    """detect → extract → union-by-name, before the P1 artifact drop (the
+    frame the A4 schema report reads)."""
     detected = detect_blocks(docs)
     per_kind = extract_records(spark, detected, infer_max_bodies=infer_max_bodies)
-    report = None
-    if with_report:
-        pre_drop = union_by_name([per_kind[k] for k in KIND_ORDER])
-        report = infer_schema_report(pre_drop)
-    normalized = normalize(per_kind, per_document=per_document, keep_provenance=True)
-    return normalized, report
+    return union_by_name([per_kind[k] for k in KIND_ORDER])
+
+
+def transform_documents(
+    spark: SparkSession, docs: DataFrame, per_document: bool = False
+) -> DataFrame:
+    """detect → extract → normalize as one lazy plan: no report, no sinks.
+
+    Returns the normalized table with provenance columns (``doc_id``,
+    ``ordinal``).
+    """
+    unioned = _extracted(spark, ensure_min_parallelism(docs))
+    return normalize_union(unioned, per_document=per_document)
 
 
 def run_batch(
@@ -67,54 +72,43 @@ def run_batch(
     payloads: list[str] | None = None,
     out_dir: str | None = None,
     use_rowstore: bool = False,
-    per_document: bool = False,
     infer_max_bodies: int | None = None,
+    docs: DataFrame | None = None,
 ) -> dict[str, Any]:
-    """Entry points 1 (CLI batch) and 4 (HTTP payload) of SURVEY.md §3.
+    """Entry points 1 (CLI batch), 3 (watch micro-batch) and 4 (HTTP payload)
+    of SURVEY.md §3.
 
-    Returns ``{"normalized": DataFrame, "schema": report, "metadata": ...}``;
-    writes the reference's output files when ``out_dir`` is given.
+    Exactly one source: ``input_path`` (a directory of files), ``payloads``
+    (in-memory strings) or ``docs`` (a ``(doc_id, content)`` frame).
+    Returns ``{"normalized": DataFrame, "schema": report, "items_by_type":
+    {...}}`` plus, with ``out_dir``, the ``"metadata"`` of the reference's
+    output files written there.  A ``payloads`` run without ``out_dir`` also
+    returns the ordered output ``"rows"``, collected from the cache: their
+    size is bounded by the request.  File and ``docs`` sources never collect
+    rows to the driver.  ``normalized`` stays lazy; an action on it re-runs
+    the chain, because the cache is gone once ``run_batch`` returns.
     """
     start = datetime.now(timezone.utc)
-    parallelism_cap = None
     if payloads is not None:
-        docs = documents_from_strings(spark, payloads)
-        # The document count is KNOWN here: widening a 2-payload API call to
-        # cluster parallelism would run dozens of empty tasks per stage
-        # (pure scheduler overhead on the latency-sensitive HTTP path).  One
-        # document cannot be split below one row anyway, so cap at the
-        # payload count.
-        parallelism_cap = max(1, len(payloads))
+        # documents_from_strings already yields one partition per payload,
+        # capped at cluster parallelism.
+        docs, source_name = documents_from_strings(spark, payloads), "<payload>"
     elif input_path is not None:
-        docs = read_documents(spark, input_path)
+        docs = ensure_min_parallelism(read_documents(spark, input_path))
+        source_name = input_path
+    elif docs is not None:
+        docs, source_name = ensure_min_parallelism(docs), "<documents>"
     else:
-        raise ValueError("one of input_path / payloads is required")
+        raise ValueError("one of input_path / payloads / docs is required")
 
-    # Multi-action run (schema report + per-type counts + N sinks): persist
-    # the ONE shared frame — the pre-drop union — so detect+extract executes
-    # once, not once per action.  MEMORY_AND_DISK: extracted records are far
-    # smaller than raw input, but spillable if not.
-    from pyspark import StorageLevel
-
-    if parallelism_cap is not None:
-        target = min(parallelism_cap, spark.sparkContext.defaultParallelism)
-        docs = ensure_min_parallelism(docs, target=target)
-    else:
-        docs = ensure_min_parallelism(docs)
-    detected = detect_blocks(docs)
-    per_kind = extract_records(spark, detected, infer_max_bodies=infer_max_bodies)
-    pre_drop = union_by_name([per_kind[k] for k in KIND_ORDER]).persist(
+    # MEMORY_AND_DISK: extracted records are far smaller than raw input,
+    # but spillable if not.
+    pre_drop = _extracted(spark, docs, infer_max_bodies).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     try:
-        report = infer_schema_report(pre_drop)
-        normalized = normalize_union(
-            pre_drop, per_document=per_document, keep_provenance=True
-        )
-        items_by_type = {
-            r["type"]: r["count"]
-            for r in normalized.groupBy("type").count().collect()
-        }
+        report, items_by_type = infer_schema_report(pre_drop)
+        normalized = normalize_union(pre_drop)
         result: dict[str, Any] = {
             "normalized": normalized,
             "schema": report,
@@ -125,11 +119,13 @@ def run_batch(
                 sorted_output(normalized),
                 report,
                 out_dir,
-                source_name=input_path or "<payload>",
+                source_name=source_name,
                 items_by_type=items_by_type,
                 start_time=start,
                 use_rowstore=use_rowstore,
             )
+        elif payloads is not None:
+            result["rows"] = sorted_output(normalized).collect()
         return result
     finally:
         pre_drop.unpersist()

@@ -18,7 +18,6 @@ from etl_pipeline2_0_spark.functions import (
     similarity,
     text,
 )
-from etl_pipeline2_0_spark.pipeline import transform_documents
 from etl_pipeline2_0_spark.sources.tables import load_table
 
 

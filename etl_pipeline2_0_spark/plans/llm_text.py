@@ -132,7 +132,7 @@ def q_extract_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"), F.col("text").alias("content")
     )
-    normalized, _ = transform_documents(spark, docs, with_report=False)
+    normalized = transform_documents(spark, docs)
     return normalized.groupBy("type").agg(F.count(F.lit(1)).alias("n_records"))
 
 

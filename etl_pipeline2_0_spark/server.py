@@ -3,11 +3,14 @@
 The reference ships a Flask app exposing ``POST /process`` (raw text body →
 pipeline → ``{'success': True, 'data': [...], 'types': {...}}``; blank body
 → 400 ``{'error': 'No data provided'}``; handler failure → 500 with
-``error``/``trace`` — app.py:61-62, 131-140).  The engine-side handler body
-lives in :mod:`etl_pipeline2_0_spark.api`; this module adds the missing
-listener with ``http.server`` only — no web framework dependency — so the
-repo serves the same endpoint contract the reference's frontend and
-``test_server.py`` exercise.
+``error``/``trace`` — app.py:61-62, 131-140).  Unlike the reference, a 500
+here carries ``error`` and an ``error_id``, never the traceback: the
+traceback goes to this module's log under that id.
+
+The engine-side handler body lives in :mod:`etl_pipeline2_0_spark.api`;
+this module adds the missing listener with ``http.server`` only — no web
+framework dependency — so the repo serves the same endpoint contract the
+reference's frontend and ``test_server.py`` exercise.
 
 Serving model: one SparkSession shared across requests (Spark sessions are
 thread-safe for job submission; concurrent requests become concurrent Spark
@@ -18,7 +21,8 @@ from blocking the health endpoint.
 from __future__ import annotations
 
 import json
-import traceback
+import logging
+import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 
@@ -26,6 +30,8 @@ from pyspark.sql import SparkSession
 
 from etl_pipeline2_0_spark.api import process_payload
 from etl_pipeline2_0_spark.frontend import INDEX_HTML as _INDEX_HTML
+
+log = logging.getLogger(__name__)
 
 
 def _make_handler(spark: SparkSession):
@@ -98,9 +104,9 @@ def _make_handler(spark: SparkSession):
                     },
                 )
             except Exception as e:  # reference 500 path (app.py:137-140)
-                self._send_json(
-                    500, {"error": str(e), "trace": traceback.format_exc()}
-                )
+                error_id = uuid.uuid4().hex
+                log.exception("POST /process failed [error_id=%s]", error_id)
+                self._send_json(500, {"error": str(e), "error_id": error_id})
 
         def log_message(self, fmt: str, *args: Any) -> None:  # quiet test runs
             pass

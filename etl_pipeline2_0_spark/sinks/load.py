@@ -55,7 +55,7 @@ def _csv_safe(df: DataFrame) -> DataFrame:
     faithful for JSON records that kept array fields through flattening."""
     cols, changed = [], False
     for f in df.schema.fields:
-        c = F.col(f.name)
+        c = F.col(f"`{f.name}`")  # a flattened JSON key may contain a dot
         if isinstance(f.dataType, ArrayType):
             if isinstance(f.dataType.elementType, StringType):
                 elems = F.transform(
@@ -130,7 +130,9 @@ def write_rowstore(
         F.lit(source_name).alias("filename"),
         F.col("source_index"),
         F.col("type").alias("data_type"),
-        F.to_json(F.struct(*normalized.columns)).alias("data_json"),
+        F.to_json(F.struct(*[F.col(f"`{c}`") for c in normalized.columns])).alias(
+            "data_json"
+        ),
         F.current_timestamp().alias("created_at"),
     )
     schemas = spark.createDataFrame(

@@ -7,8 +7,11 @@ no recovery story.
 Spark mapping: the Structured Streaming **file source** is exactly this model
 done right — file-arrival-triggered micro-batches, completed-file listing
 (no settle-sleep race), checkpoint-based exactly-once bookkeeping, and
-``maxFilesPerTrigger`` for pacing.  Each micro-batch runs the same batch
-transform via ``foreachBatch``; per-batch schema inference preserves the
+``maxFilesPerTrigger`` for pacing.  Each micro-batch runs the batch
+pipeline itself (``run_batch`` over the batch's documents) via
+``foreachBatch`` and writes the reference's per-run files under
+``batch_<id>/``: ``cleaned_output/`` (CSV), ``dynamic_schema.json`` and
+``processing_metadata.json``.  Per-batch schema inference preserves the
 reference's per-file dynamic-schema semantics.
 
 Deliberately NOT reproduced: the reference's cross-file record accumulation
@@ -19,13 +22,10 @@ bug, SURVEY.md §2.9); each micro-batch here is isolated.
 from __future__ import annotations
 
 import os
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_pipeline2_0_spark.operators.normalize import sorted_output
-from etl_pipeline2_0_spark.pipeline import transform_documents
-from etl_pipeline2_0_spark.sinks.load import write_csv, write_schema_json
+from etl_pipeline2_0_spark.pipeline import run_batch
 from etl_pipeline2_0_spark.sources.documents import read_documents_stream
 
 
@@ -35,7 +35,6 @@ def run_watch_mode(
     out_dir: str,
     checkpoint_dir: str | None = None,
     available_now: bool = False,
-    on_batch: Callable[[DataFrame, int], None] | None = None,
 ):
     """Watch ``input_dir``; per micro-batch of new files, run the pipeline and
     write batch-numbered outputs under ``out_dir``.
@@ -49,12 +48,9 @@ def run_watch_mode(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        normalized, report = transform_documents(spark, batch_df, per_document=False)
-        batch_out = os.path.join(out_dir, f"batch_{batch_id}")
-        write_csv(sorted_output(normalized), os.path.join(batch_out, "cleaned_output"), single_file=True)
-        write_schema_json(report, os.path.join(batch_out, "dynamic_schema.json"))
-        if on_batch is not None:
-            on_batch(normalized, batch_id)
+        run_batch(
+            spark, docs=batch_df, out_dir=os.path.join(out_dir, f"batch_{batch_id}")
+        )
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

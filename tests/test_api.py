@@ -125,3 +125,38 @@ def test_http_server_body_framing(spark):
     finally:
         server.shutdown()
         server.server_close()
+
+
+def test_http_server_500_hides_traceback(spark, monkeypatch, caplog):
+    # A handler failure answers 500 with an error id; the traceback goes to
+    # the server log under that id, never to the client.
+    import json as _json
+    import logging
+    import urllib.request
+
+    import pytest
+
+    from etl_pipeline2_0_spark import server as server_mod
+
+    def boom(spark, payload):
+        raise RuntimeError("handler exploded")
+
+    monkeypatch.setattr(server_mod, "process_payload", boom)
+    caplog.set_level(logging.ERROR, logger=server_mod.__name__)
+    server, base = _served(spark)
+    try:
+        req = urllib.request.Request(
+            base + "/process", data=b"any payload at all", method="POST"
+        )
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(req, timeout=30)
+        assert err.value.code == 500
+        body = _json.load(err.value)
+        assert "trace" not in body
+        assert body["error"] == "handler exploded"
+        assert body["error_id"]
+    finally:
+        server.shutdown()
+        server.server_close()
+    (record,) = [r for r in caplog.records if body["error_id"] in r.getMessage()]
+    assert record.exc_info is not None

@@ -2,9 +2,13 @@
 
 from __future__ import annotations
 
+import csv
+import glob
 import json
 import os
+import uuid
 
+from etl_pipeline2_0_spark.api import process_payload
 from etl_pipeline2_0_spark.operators.detect import detect_blocks
 from etl_pipeline2_0_spark.operators.extract import KIND_ORDER, extract_records
 from etl_pipeline2_0_spark.operators.normalize import sorted_output, union_by_name
@@ -47,7 +51,7 @@ def test_golden_display_order(spark, golden_doc):
 
 def test_golden_schema_report(spark, golden_doc):
     docs = spark.createDataFrame([("d0", golden_doc)], "doc_id string, content string")
-    _, report = transform_documents(spark, docs)
+    report = run_batch(spark, docs=docs)["schema"]
     # 18 fields: type, source_index, title, word_count + 14 data fields
     assert len(report) == 18
     assert set(EXPECTED_DATA_FIELDS) <= set(report)
@@ -156,7 +160,7 @@ def test_multi_document_batch(spark, golden_doc):
     docs = spark.createDataFrame(
         [("a", golden_doc), ("b", '{"k": 1}')], "doc_id string, content string"
     )
-    normalized, _ = transform_documents(spark, docs, per_document=True)
+    normalized = transform_documents(spark, docs, per_document=True)
     per_doc = {
         (r["doc_id"], r["total_items"]) for r in normalized.select("doc_id", "total_items").collect()
     }
@@ -199,3 +203,76 @@ def test_sampled_json_inference_cap(spark):
         r["a"] for r in capped["normalized"].collect() if r["type"] == "json"
     )
     assert a_vals == [1, 2]
+
+
+def test_dotted_json_keys(spark, tmp_path):
+    # A flattened JSON key may contain a dot: ``user.id`` names a column,
+    # not a struct path, in the normalized select, the CSV projection of
+    # array columns and the row store's JSON blob.
+    doc = (
+        '{"user.id": 41, "tags": ["a", "b"]}\n'
+        '{"user.id": 42, "tags": ["c"]}\n'
+        "a plain text line after the dotted records\n"
+    )
+    out = str(tmp_path / "out")
+    result = run_batch(spark, payloads=[doc], out_dir=out, use_rowstore=True)
+    assert result["items_by_type"] == {"json": 2, "text": 1}
+    assert result["schema"]["user.id"]["present_in"] == 2
+    (part,) = glob.glob(os.path.join(out, "cleaned_output", "*.csv"))
+    with open(part, newline="", encoding="utf-8") as f:
+        rows = list(csv.DictReader(f))
+    json_rows = [r for r in rows if r["type"] == "json"]
+    assert [(r["user.id"], r["tags"]) for r in json_rows] == [
+        ("41", "['a', 'b']"),
+        ("42", "['c']"),
+    ]
+    store = spark.read.parquet(os.path.join(out, "rowstore", "processed_data"))
+    blobs = [json.loads(r["data_json"]) for r in store.collect()]
+    assert sorted(b["user.id"] for b in blobs if b["type"] == "json") == [41, 42]
+
+    served = process_payload(spark, doc)
+    assert served["success"] is True
+    assert [(r["user.id"], r["tags"]) for r in served["data"][:2]] == [
+        (41, ["a", "b"]),
+        (42, ["c"]),
+    ]
+    assert served["types"]["user.id"] == "number"
+
+
+def _jobs_and_leaked_cache(spark, call) -> tuple[int, set]:
+    """Spark jobs ``call`` runs, and the persisted RDDs it leaves behind."""
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keys())
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # Job-start events reach the status tracker through the listener bus.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    leaked = set(sc._jsc.getPersistentRDDs().keys()) - before
+    return len(sc.statusTracker().getJobIdsForGroup(group)), leaked
+
+
+def test_pipeline_runs_once_per_call(spark, golden_doc, tmp_path):
+    # The API serves the rows run_batch collected from its own cache: it
+    # must not run detect → extract → normalize a second time, and no call
+    # may leave its persisted frame behind.
+    payload_jobs, leaked = _jobs_and_leaked_cache(
+        spark, lambda: process_payload(spark, golden_doc)
+    )
+    assert not leaked
+    batch_jobs, leaked = _jobs_and_leaked_cache(
+        spark, lambda: run_batch(spark, payloads=[golden_doc])
+    )
+    assert not leaked
+    assert payload_jobs <= batch_jobs
+    assert payload_jobs <= 9
+    out = str(tmp_path / "out")
+    sink_jobs, leaked = _jobs_and_leaked_cache(
+        spark,
+        lambda: run_batch(spark, payloads=[golden_doc], out_dir=out, use_rowstore=True),
+    )
+    assert not leaked
+    assert sink_jobs <= 15

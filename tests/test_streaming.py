@@ -10,6 +10,7 @@ import pytest
 # each round.  Run directly with: python -m pytest -m slow tests/
 pytestmark = pytest.mark.slow
 
+import json
 import os
 import time
 
@@ -22,39 +23,36 @@ def test_watch_mode_processes_backlog(spark, golden_doc, tmp_path):
     out_dir = tmp_path / "out"
     in_dir.mkdir()
     (in_dir / "doc1.txt").write_text(golden_doc)
+    done: set[str] = set()
 
-    seen: list[tuple[int, int]] = []
+    def run_and_count_new_items() -> int:
+        """One backlog run; total_items over the batch dirs it wrote."""
+        q = run_watch_mode(spark, str(in_dir), str(out_dir), available_now=True)
+        q.awaitTermination(120)
+        new = sorted(
+            d for d in os.listdir(out_dir) if d.startswith("batch_") and d not in done
+        )
+        done.update(new)
+        total = 0
+        for d in new:
+            batch = out_dir / d
+            assert (batch / "dynamic_schema.json").is_file()
+            csvs = os.listdir(batch / "cleaned_output")
+            assert any(f.endswith(".csv") for f in csvs)
+            with open(batch / "processing_metadata.json") as f:
+                total += json.load(f)["total_items"]
+        return total
 
-    def on_batch(df, batch_id):
-        seen.append((batch_id, df.count()))
-
-    q = run_watch_mode(
-        spark, str(in_dir), str(out_dir), available_now=True, on_batch=on_batch
-    )
-    q.awaitTermination(120)
-    assert seen and sum(n for _, n in seen) == EXPECTED_ROWS
-    batch_dirs = [d for d in os.listdir(out_dir) if d.startswith("batch_")]
-    assert batch_dirs
-    csvs = os.listdir(out_dir / batch_dirs[0] / "cleaned_output")
-    assert any(f.endswith(".csv") for f in csvs)
+    assert run_and_count_new_items() == EXPECTED_ROWS
+    assert done
 
     # Exactly-once: restarting over the same checkpoint must not reprocess.
-    seen.clear()
-    q2 = run_watch_mode(
-        spark, str(in_dir), str(out_dir), available_now=True, on_batch=on_batch
-    )
-    q2.awaitTermination(120)
-    assert sum(n for _, n in seen) == 0
+    assert run_and_count_new_items() == 0
 
     # New file arrives → exactly its records processed.
     (in_dir / "doc2.txt").write_text('{"k": 1}\nanother plain text line\n')
     time.sleep(0.2)
-    seen.clear()
-    q3 = run_watch_mode(
-        spark, str(in_dir), str(out_dir), available_now=True, on_batch=on_batch
-    )
-    q3.awaitTermination(120)
-    assert sum(n for _, n in seen) == 2
+    assert run_and_count_new_items() == 2
 
 
 def test_stream_to_partitioned_idempotent(spark, sf_dir, tmp_path):

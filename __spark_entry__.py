@@ -27,7 +27,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    from etl_pipeline2_0_spark.pipeline import transform_documents
+    from etl_pipeline2_0_spark.pipeline import count_by_type
     from etl_pipeline2_0_spark.sources.tables import load_table
 
     sf_dir = "/root/testdata/sf0.001"
@@ -35,8 +35,7 @@ def entry(spark: SparkSession) -> DataFrame:
         F.col("doc_id").cast("string").alias("doc_id"),
         F.col("text").alias("content"),
     )
-    normalized = transform_documents(spark, docs)
-    by_type = normalized.groupBy("type").agg(F.count(F.lit(1)).alias("n_records"))
+    by_type = count_by_type(spark, docs)
     total = by_type.agg(F.sum("n_records").alias("total_items"))
     return by_type.crossJoin(F.broadcast(total))
 

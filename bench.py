@@ -21,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from etl_pipeline2_0_spark.plans.registry import ALL_QUERIES
 from etl_pipeline2_0_spark.session import get_spark
 from etl_pipeline2_0_spark.sources.tables import TABLES, load_table
+from etl_pipeline2_0_spark.streaming.windows import DEFAULT_STATE_PARTITIONS
 
 # Headline set: the flagship scan-agg, the join pyramid, windows/sessionize,
 # and one of each scale-extension family (dedup, similarity, text, pipeline).
@@ -251,15 +252,14 @@ def _doc_pipeline(spark, sf_dir):
     its perf at bench scale alongside the relational suite)."""
     from pyspark.sql import functions as F
 
-    from etl_pipeline2_0_spark.pipeline import transform_documents
+    from etl_pipeline2_0_spark.pipeline import count_by_type
     from etl_pipeline2_0_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.col("text").alias("content"),
     )
-    normalized = transform_documents(spark, docs)
-    return normalized.groupBy("type").agg(F.count(F.lit(1)).alias("n_records"))
+    return count_by_type(spark, docs)
 
 
 def _llm_pipeline(spark, sf_dir):
@@ -855,7 +855,9 @@ def main() -> None:
             # rows run under this many state partitions (library default
             # / env override), so cross-round records are comparable.
             "stream_state_partitions": int(
-                os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", 8)
+                os.environ.get(
+                    "SPARK_GRAFT_STREAM_STATE_PARTITIONS", DEFAULT_STATE_PARTITIONS
+                )
             ),
         }
     )

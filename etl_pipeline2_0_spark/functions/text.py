@@ -107,12 +107,6 @@ def stopword_ratio(col: Column) -> Column:
     return F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(stops / F.size(toks))
 
 
-def mean_token_len(col: Column) -> Column:
-    toks = tokens(col)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(total / F.size(toks))
-
-
 def quality_score(col: Column) -> Column:
     """Composite [0,1] quality heuristic: rewards normal-length tokens and a
     sane stopword share, penalizes punctuation soup.  A simple, fully

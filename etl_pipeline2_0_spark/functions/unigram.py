@@ -212,21 +212,6 @@ def _viterbi_segments(
     )
 
 
-def _viterbi_usage(
-    spans_p: DataFrame,
-    wt: DataFrame,
-    max_word_len: int,
-) -> DataFrame:
-    """Frequency-weighted piece usage counts (piece, c) from the
-    Viterbi-best segmentations."""
-    return (
-        _viterbi_segments(spans_p, wt, max_word_len)
-        .select("freq", F.explode("pieces").alias("piece"))
-        .groupBy("piece")
-        .agg(F.sum("freq").cast("bigint").alias("c"))
-    )
-
-
 def unigram_train(
     df: DataFrame,
     text_col: str = "text",

@@ -41,7 +41,6 @@ from pyspark.sql import types as T
 KIND_ORDER = ["html", "json", "text", "media"]  # E11 fixed kind order
 
 TITLE_MAX_LEN = 50  # E9/O3: text titles truncated to 50 chars
-ERROR_RAW_MAX_LEN = 100  # E7: invalid-JSON raw excerpt length
 
 
 def _word_count(text: Column) -> Column:
@@ -181,11 +180,7 @@ def flatten_struct_columns(df: DataFrame) -> DataFrame:
     return df.select(*out_cols)
 
 
-def _infer_json_schema(
-    spark: SparkSession,
-    bodies: DataFrame,
-    max_bodies: int | None = None,
-) -> T.StructType:
+def _infer_json_schema(spark: SparkSession, bodies: DataFrame) -> T.StructType:
     """Distributed JSON schema inference over a one-string-column DataFrame.
 
     Stays JVM-side: hands the Dataset[String] straight to the Scala JSON
@@ -193,19 +188,9 @@ def _infer_json_schema(
     ``df.rdd.map`` formulation ships every body driver←→Python — profiled
     ~2× the whole pipeline's cost).  Falls back to the RDD path if the
     internal handle is unavailable.
-
-    ``max_bodies`` caps the inference pass (a ``limit`` before the reader):
-    the 100 TB escape hatch, since full-corpus inference is a second scan.
-    Correctness note: keys that appear ONLY in bodies past the cap are
-    dropped from the inferred schema (their values are lost exactly as an
-    unknown key is in the reference's two-pass design); type widening
-    (long→double→string) can also settle differently if the sample misses
-    a wider value.  ``None`` (default) preserves exact full-pass parity.
     """
     import json as _json
 
-    if max_bodies is not None:
-        bodies = bodies.limit(max_bodies)
     try:
         jds = getattr(bodies._jdf, "as")(
             spark._jvm.org.apache.spark.sql.Encoders.STRING()
@@ -216,11 +201,7 @@ def _infer_json_schema(
         return spark.read.json(bodies.rdd.map(lambda r: r[0])).schema
 
 
-def json_records(
-    spark: SparkSession,
-    detected: DataFrame,
-    infer_max_bodies: int | None = None,
-) -> DataFrame:
+def json_records(spark: SparkSession, detected: DataFrame) -> DataFrame:
     """E7+E8: parse every detected JSON block against the batch-inferred
     schema, flatten nested structs, tag engine columns.
 
@@ -228,17 +209,13 @@ def json_records(
     ``spark.read.json`` over the block bodies (distributed schema inference —
     per-partition schema merge, the Spark-native analog of the reference's
     whole-dataset key scan), pass 2 is a single ``from_json`` projection.
-    ``infer_max_bodies`` caps pass 1 for huge corpora — see
-    ``_infer_json_schema`` for the correctness trade-off; the default keeps
-    exact reference parity.
 
     Detection already filtered to valid JSON (E3), so the reference's
-    invalid-JSON error record (etl_pipeline.py:136-137) cannot occur here;
-    ``parse_json_or_error`` below covers that path for direct API use.
+    invalid-JSON error record (etl_pipeline.py:136-137) cannot occur here.
     """
     exploded = _explode_kind(detected, "json", "json_blocks")
     bodies = exploded.select("body")
-    inferred = _infer_json_schema(spark, bodies, max_bodies=infer_max_bodies)
+    inferred = _infer_json_schema(spark, bodies)
     if not inferred.fields:
         # No JSON blocks in the corpus (or none with keys).
         return exploded.select("doc_id", "type", "source_index", "ordinal")
@@ -269,23 +246,7 @@ def json_records(
     return flat.toDF(*renamed).drop(*dupes) if dupes else flat
 
 
-def parse_json_or_error(df: DataFrame, body_col: str = "body") -> DataFrame:
-    """E7's failure path as a standalone transform: adds ``error`` and
-    ``raw`` columns for rows whose body is not valid JSON."""
-    valid = F.try_parse_json(F.col(body_col)).isNotNull()
-    return df.withColumns(
-        {
-            "error": F.when(~valid, F.lit("Invalid JSON")),
-            "raw": F.when(~valid, F.substring(F.col(body_col), 1, ERROR_RAW_MAX_LEN)),
-        }
-    )
-
-
-def extract_records(
-    spark: SparkSession,
-    detected: DataFrame,
-    infer_max_bodies: int | None = None,
-) -> dict[str, DataFrame]:
+def extract_records(spark: SparkSession, detected: DataFrame) -> dict[str, DataFrame]:
     """E11: per-kind record DataFrames in the fixed kind order.
 
     Returned as a dict (html → json → text → media) so the pipeline can
@@ -294,7 +255,7 @@ def extract_records(
     """
     return {
         "html": html_records(detected),
-        "json": json_records(spark, detected, infer_max_bodies=infer_max_bodies),
+        "json": json_records(spark, detected),
         "text": text_records(detected),
         "media": media_records(detected),
     }

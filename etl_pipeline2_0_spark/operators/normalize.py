@@ -18,11 +18,12 @@ Scale notes:
 
 - ``unionByName(allowMissingColumns=True)`` is the exact Spark primitive for
   the reference's group-by-type-then-concat strategy; the null fill is free.
-- ``total_items`` is attached via a **broadcast cross join against a 1-row
-  aggregate**, never ``count(*) OVER ()`` — a global window collapses the
-  whole table into a single partition, which is exactly the anti-pattern
-  that dies at 100 TB.  The aggregate is a 2-stage partial count (map-side
-  combine), and the join broadcasts one row.
+- ``total_items`` is counted once: the A4 schema report's one aggregate
+  (grouped by ``type``) already yields every record kind's count, and the
+  caller passes their sum in, so ``normalize_union`` attaches a literal.
+  The table is never counted a second time, and never with
+  ``count(*) OVER ()`` — a global window collapses the whole table into a
+  single partition, which is exactly the anti-pattern that dies at 100 TB.
 - Deliberately NOT reproduced: the reference's cross-file record-accumulation
   bug (etl_pipeline.py:26 list never cleared across runs — SURVEY.md §2.9);
   each ``normalize_union`` call is a pure function of its inputs.
@@ -46,29 +47,19 @@ def union_by_name(frames: list[DataFrame]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
 
 
-def with_total_items(df: DataFrame, per_document: bool = False) -> DataFrame:
-    """W1: broadcast the global row count onto every row.
-
-    ``per_document=True`` scopes the count to each source document instead —
-    the semantics a multi-file batch wants at scale (a partitioned window,
-    shuffles by doc_id, no single-partition collapse).
-    """
-    if per_document:
-        counts = df.groupBy("doc_id").agg(F.count(F.lit(1)).alias("total_items"))
-        return df.join(F.broadcast(counts), "doc_id", "left")
-    total = df.agg(F.count(F.lit(1)).alias("total_items"))
-    return df.crossJoin(F.broadcast(total))
-
-
 def kind_rank(col):
     """O1: numeric rank of the fixed kind order html→json→text→media."""
     order = F.array(*[F.lit(k) for k in KIND_ORDER])
     return F.array_position(order, col)
 
 
-def normalize_union(unioned: DataFrame, per_document: bool = False) -> DataFrame:
-    """P1 → W1 → F9 → O1/P3: the reference's ``normalize`` stage over the
+def normalize_union(unioned: DataFrame, total_items: int) -> DataFrame:
+    """P1 → W1/F9 → O1/P3: the reference's ``normalize`` stage over the
     union-by-name (U1) of the per-kind record frames.
+
+    ``total_items`` is the row count of ``unioned``, which the caller has
+    already taken (the schema report's per-type counts); every row carries
+    it as a bigint literal (W1, and F9 by construction: never null).
 
     Produces the single rectangular table with the provenance columns
     ``doc_id``, ``ordinal``, universal columns ``type``, ``source_index``,
@@ -81,10 +72,8 @@ def normalize_union(unioned: DataFrame, per_document: bool = False) -> DataFrame
     deterministic order is required (demo CSV, goldens).
     """
     unioned = unioned.drop(*ARTIFACT_COLUMNS)  # P1
-    with_total = with_total_items(unioned, per_document=per_document)
-    # F9: total_items coerced to bigint, nulls → 0 (try_cast ≡ errors='coerce')
-    with_total = with_total.withColumn(
-        "total_items", F.coalesce(F.col("total_items").cast("bigint"), F.lit(0))
+    with_total = unioned.withColumn(
+        "total_items", F.lit(total_items).cast("bigint")
     )
     rest = sorted(
         c

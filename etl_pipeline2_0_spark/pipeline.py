@@ -6,14 +6,19 @@
 Every caller goes through one detect → extract → union-by-name chain
 (``_extracted``), in one of two forms:
 
-- ``transform_documents`` is the lazy form for plan callers (registry
-  queries, ``entry``, ``bench.py``): it returns the normalized frame and runs
-  no action, so the caller's own action plans the whole chain.
+- ``count_by_type`` is the lazy form for plan callers (registry queries,
+  ``entry``, ``bench.py``): the reference's items_by_type aggregate as a
+  ``(type, n_records)`` frame.  It runs no action, so the caller's own
+  action plans the whole chain.
 - ``run_batch`` is the materialized form for the CLI, the HTTP API and watch
   mode.  It owns the run's one persisted frame, the pre-drop union: the
   schema report with its per-type counts, the ordered rows or the sinks all
   read that cache, and every one of those actions finishes before
   ``run_batch`` unpersists it.
+
+The records are counted once, by the schema report's aggregate: the W1
+``total_items`` column is the sum of its per-type counts, attached as a
+literal.
 
 Unlike the reference (eager, single-threaded, one file at a time), every
 stage here is a DataFrame transform over a *corpus* — one job processes a
@@ -27,6 +32,7 @@ from typing import Any
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from etl_pipeline2_0_spark.operators.detect import detect_blocks
 from etl_pipeline2_0_spark.operators.extract import KIND_ORDER, extract_records
@@ -44,26 +50,23 @@ from etl_pipeline2_0_spark.sources.documents import (
 )
 
 
-def _extracted(
-    spark: SparkSession, docs: DataFrame, infer_max_bodies: int | None = None
-) -> DataFrame:
+def _extracted(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """detect → extract → union-by-name, before the P1 artifact drop (the
     frame the A4 schema report reads)."""
     detected = detect_blocks(docs)
-    per_kind = extract_records(spark, detected, infer_max_bodies=infer_max_bodies)
+    per_kind = extract_records(spark, detected)
     return union_by_name([per_kind[k] for k in KIND_ORDER])
 
 
-def transform_documents(
-    spark: SparkSession, docs: DataFrame, per_document: bool = False
-) -> DataFrame:
-    """detect → extract → normalize as one lazy plan: no report, no sinks.
-
-    Returns the normalized table with provenance columns (``doc_id``,
-    ``ordinal``).
-    """
-    unioned = _extracted(spark, ensure_min_parallelism(docs))
-    return normalize_union(unioned, per_document=per_document)
+def count_by_type(spark: SparkSession, docs: DataFrame) -> DataFrame:
+    """detect → extract → items_by_type (A2) as one lazy plan: one
+    ``(type string, n_records bigint)`` row per record kind found in
+    ``docs``, a ``(doc_id, content)`` frame.  No report, no sinks."""
+    return (
+        _extracted(spark, ensure_min_parallelism(docs))
+        .groupBy("type")
+        .agg(F.count(F.lit(1)).alias("n_records"))
+    )
 
 
 def run_batch(
@@ -72,7 +75,6 @@ def run_batch(
     payloads: list[str] | None = None,
     out_dir: str | None = None,
     use_rowstore: bool = False,
-    infer_max_bodies: int | None = None,
     docs: DataFrame | None = None,
 ) -> dict[str, Any]:
     """Entry points 1 (CLI batch), 3 (watch micro-batch) and 4 (HTTP payload)
@@ -103,12 +105,12 @@ def run_batch(
 
     # MEMORY_AND_DISK: extracted records are far smaller than raw input,
     # but spillable if not.
-    pre_drop = _extracted(spark, docs, infer_max_bodies).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    pre_drop = _extracted(spark, docs).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         report, items_by_type = infer_schema_report(pre_drop)
-        normalized = normalize_union(pre_drop)
+        normalized = normalize_union(
+            pre_drop, total_items=sum(items_by_type.values())
+        )
         result: dict[str, Any] = {
             "normalized": normalized,
             "schema": report,

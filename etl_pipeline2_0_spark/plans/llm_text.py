@@ -18,7 +18,7 @@ from etl_pipeline2_0_spark.functions import (
     similarity,
     text,
 )
-from etl_pipeline2_0_spark.pipeline import transform_documents
+from etl_pipeline2_0_spark.pipeline import count_by_type
 from etl_pipeline2_0_spark.sources.tables import load_table
 from etl_pipeline2_0_spark.plans.llm_common import (
     _MARKER_SQL,
@@ -132,8 +132,7 @@ def q_extract_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"), F.col("text").alias("content")
     )
-    normalized = transform_documents(spark, docs)
-    return normalized.groupBy("type").agg(F.count(F.lit(1)).alias("n_records"))
+    return count_by_type(spark, docs)
 
 
 # The synthetic corpus contains no HTML/JSON/base64 (word-soup text), so the

@@ -13,10 +13,9 @@ Spark mapping: CSV via the native writer (quoting rules of the reference's
 browser export, S9, are the CSV writer's defaults); the row store is
 partitioned **parquet** with the same two-table layout and
 ``to_json(struct(*))`` reproducing the row-as-JSON-blob semantics
-(etl_pipeline.py:360) — Spark-SQL-queryable, no 2 GB SQLite ceiling, and a
-``jdbc_url`` escape hatch writes the identical frames through JDBC instead.
-``single_file=True`` coalesces the demo CSV to one part for byte-level
-parity with the reference's output; production writes stay partitioned.
+(etl_pipeline.py:360) — Spark-SQL-queryable, no 2 GB SQLite ceiling.  The
+CSV is coalesced to one part file, the reference's single ``cleaned_output``
+file; the row store's writes stay partitioned.
 """
 
 from __future__ import annotations
@@ -88,11 +87,9 @@ def _csv_safe(df: DataFrame) -> DataFrame:
     return df.select(*cols) if changed else df
 
 
-def write_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
-    """S5: CSV with header.  ``coalesce(1)`` only for demo parity — a
-    distributed write keeps one file per partition."""
-    out = _csv_safe(df)
-    out = out.coalesce(1) if single_file else out
+def write_csv(df: DataFrame, path: str) -> None:
+    """S5: CSV with header, in one part file like the reference's output."""
+    out = _csv_safe(df).coalesce(1)
     out.write.mode("overwrite").option("header", "true").csv(path)
 
 
@@ -115,15 +112,14 @@ def write_rowstore(
     schema_report: dict[str, Any],
     base_path: str,
     source_name: str = "",
-    jdbc_url: str | None = None,
 ) -> None:
     """S8: the two-table row store.
 
     ``processed_data(filename, source_index, data_type, data_json,
     created_at)`` — one JSON blob per record via ``to_json(struct(*))`` —
-    and ``schemas(filename, schema_json, created_at)``.  Parquet by default
-    (partitioned by ``data_type`` so per-type scans prune); JDBC when a URL
-    is supplied.
+    and ``schemas(filename, schema_json, created_at)``, as parquet
+    (``processed_data`` partitioned by ``data_type`` so per-type scans
+    prune).
     """
     spark = normalized.sparkSession
     processed = normalized.select(
@@ -139,10 +135,6 @@ def write_rowstore(
         [(source_name, json.dumps(schema_report, default=str))],
         "filename string, schema_json string",
     ).withColumn("created_at", F.current_timestamp())
-    if jdbc_url is not None:
-        processed.write.mode("append").jdbc(jdbc_url, "processed_data")
-        schemas.write.mode("append").jdbc(jdbc_url, "schemas")
-        return
     processed.write.mode("overwrite").partitionBy("data_type").parquet(
         os.path.join(base_path, "processed_data")
     )
@@ -157,11 +149,10 @@ def load_outputs(
     items_by_type: dict[str, int] | None = None,
     start_time: datetime | None = None,
     use_rowstore: bool = False,
-    single_file_csv: bool = True,
 ) -> dict[str, Any]:
     """The reference's ``load`` stage: CSV + schema JSON + metadata JSON
     (+ optional row store).  Returns the metadata dict."""
-    write_csv(normalized, os.path.join(out_dir, "cleaned_output"), single_file=single_file_csv)
+    write_csv(normalized, os.path.join(out_dir, "cleaned_output"))
     write_schema_json(schema_report, os.path.join(out_dir, "dynamic_schema.json"))
     end = datetime.now(timezone.utc)
     metadata = {

@@ -16,7 +16,7 @@ from etl_pipeline2_0_spark.operators.schema_report import (
     frontend_type_tags,
     infer_schema_report,
 )
-from etl_pipeline2_0_spark.pipeline import run_batch, transform_documents
+from etl_pipeline2_0_spark.pipeline import count_by_type, run_batch
 from tests.conftest import (
     EXPECTED_DATA_FIELDS,
     EXPECTED_ROWS,
@@ -155,16 +155,18 @@ def test_sinks_roundtrip(spark, golden_doc, tmp_path):
 
 def test_multi_document_batch(spark, golden_doc):
     # Unlike the reference (one file per run + a cross-file accumulation
-    # bug), one job processes a corpus; per_document scoping gives each doc
-    # its own total_items.
+    # bug), one job processes a corpus, and W1 counts the whole batch once.
     docs = spark.createDataFrame(
         [("a", golden_doc), ("b", '{"k": 1}')], "doc_id string, content string"
     )
-    normalized = transform_documents(spark, docs, per_document=True)
-    per_doc = {
-        (r["doc_id"], r["total_items"]) for r in normalized.select("doc_id", "total_items").collect()
-    }
-    assert per_doc == {("a", EXPECTED_ROWS), ("b", 1)}
+    result = run_batch(spark, docs=docs)
+    items = result["items_by_type"]
+    assert items == {"html": 3, "json": 10, "text": 15}
+    assert sum(items.values()) == EXPECTED_ROWS + 1
+    totals = {r["total_items"] for r in result["normalized"].select("total_items").collect()}
+    assert totals == {EXPECTED_ROWS + 1}
+    # The lazy form counts the same records.
+    assert dict(count_by_type(spark, docs).collect()) == items
 
 
 def test_no_json_documents(spark):
@@ -187,22 +189,6 @@ def test_latin1_charset_read(spark, tmp_path):
     assert len(docs) == 1
     assert docs[0]["content"] == "caf\xe9 au lait"
     assert content  # silence unused warning path
-
-
-def test_sampled_json_inference_cap(spark):
-    # infer_max_bodies caps the schema-inference pass: keys appearing only
-    # past the cap drop out of the schema (documented trade-off); with no
-    # cap the full-pass schema is unchanged.
-    p1 = '{"a": 1}\n{"a": 2, "late_key": "x"}\n'
-    full = run_batch(spark, payloads=[p1])
-    capped = run_batch(spark, payloads=[p1], infer_max_bodies=1)
-    assert "late_key" in full["schema"]
-    assert "late_key" not in capped["schema"]
-    # Shared keys still parse identically under the cap.
-    a_vals = sorted(
-        r["a"] for r in capped["normalized"].collect() if r["type"] == "json"
-    )
-    assert a_vals == [1, 2]
 
 
 def test_dotted_json_keys(spark, tmp_path):
@@ -268,11 +254,11 @@ def test_pipeline_runs_once_per_call(spark, golden_doc, tmp_path):
     )
     assert not leaked
     assert payload_jobs <= batch_jobs
-    assert payload_jobs <= 9
+    assert payload_jobs <= 7
     out = str(tmp_path / "out")
     sink_jobs, leaked = _jobs_and_leaked_cache(
         spark,
         lambda: run_batch(spark, payloads=[golden_doc], out_dir=out, use_rowstore=True),
     )
     assert not leaked
-    assert sink_jobs <= 15
+    assert sink_jobs <= 11

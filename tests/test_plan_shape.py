@@ -29,6 +29,13 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _after(plan: str, marker: str) -> str:
+    """``plan.split(marker)[1]``, failing with a plan excerpt (not an
+    IndexError) when the marker is missing."""
+    assert marker in plan, f"{marker!r} not in plan:\n{plan[:1500]}"
+    return plan.split(marker)[1]
+
+
 def test_q1_filter_pushed_to_scan(spark, sf_dir):
     df = R.q1_pricing_summary(spark, sf_dir)
     plan = _plan(df)
@@ -36,13 +43,13 @@ def test_q1_filter_pushed_to_scan(spark, sf_dir):
     # the inferred `IsNotNull(l_shipdate)` prefix — it was an artifact
     # of constraint propagation, which the session now disables; the
     # user predicate's pushdown is the contract.)
-    assert "LessThanOrEqual(l_shipdate" in plan.split("PushedFilters: [")[1]
+    assert "LessThanOrEqual(l_shipdate" in _after(plan, "PushedFilters: [")
 
 
 def test_q1_column_pruning(spark, sf_dir):
     plan = _plan(R.q1_pricing_summary(spark, sf_dir))
     # Only the 7 needed columns read, not l_orderkey/l_partkey/etc.
-    assert "l_orderkey" not in plan.split("ReadSchema")[1][:400]
+    assert "l_orderkey" not in _after(plan, "ReadSchema")[:400]
 
 
 def test_broadcast_joins_chosen(spark, sf_dir):
@@ -71,7 +78,10 @@ def test_partial_aggregation_present(spark, sf_dir):
 def test_detect_extract_no_driver_collect(spark, sf_dir):
     # The doc pipeline aggregate stays distributed (no Collect in plan).
     df = L.q_extract_doc_stats(spark, sf_dir)
-    assert "CollectLimit" not in _plan(df)
+    plan = _plan(df)
+    assert "CollectLimit" not in plan
+    # Counting by type needs no second count of the corpus (no W1 cross join).
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_minhash_candidates_equijoin(spark, sf_dir):
@@ -134,11 +144,11 @@ def test_q6_all_predicates_pushed(spark, sf_dir):
     from etl_pipeline2_0_spark.plans import tpch_more as T
 
     plan = _plan(T.q6_revenue_forecast(spark, sf_dir))
-    pushed = plan.split("PushedFilters")[1][:400]
+    pushed = _after(plan, "PushedFilters")[:400]
     for col in ("l_shipdate", "l_discount", "l_quantity"):
         assert col in pushed, f"{col} predicate not pushed:\n{pushed}"
     # Column pruning: only the 4 referenced columns in ReadSchema.
-    read = plan.split("ReadSchema")[1][:400]
+    read = _after(plan, "ReadSchema")[:400]
     assert "l_orderkey" not in read and "l_returnflag" not in read
 
 
@@ -252,7 +262,7 @@ def test_corpus_filter_is_narrow_single_pass(spark, sf_dir):
     # no shuffle anywhere, and only (doc_id, text) read from parquet.
     plan = _plan(L.q_corpus_filter(spark, sf_dir))
     assert "Exchange" not in plan
-    read = plan.split("ReadSchema")[1][:200]
+    read = _after(plan, "ReadSchema")[:200]
     assert "text" in read and "lang" not in read and "source" not in read
 
 
@@ -476,7 +486,7 @@ def test_chunk_documents_is_narrow_no_shuffle(spark, sf_dir):
     plan = _plan(L.q_chunk_documents(spark, sf_dir))
     assert "Exchange" not in plan
     assert "Sort" not in plan
-    read = plan.split("ReadSchema")[1][:200]
+    read = _after(plan, "ReadSchema")[:200]
     assert "text" in read and "lang" not in read and "source" not in read
 
 

@@ -111,6 +111,7 @@ def test_partitioned_write_prunes_and_dynamic_overwrite(spark, sf_dir, tmp_path)
     # PartitionFilters and nothing remains as a data-level filter.  (r18:
     # don't pin the inferred `isnotnull(...)` prefix — it was an artifact
     # of constraint propagation, which the session now disables.)
+    assert "PartitionFilters: [" in plan, plan[:1500]
     part_filters = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
     assert "event_type" in part_filters and "click" in part_filters, plan[:1500]
     assert "DataFilters: []" in plan, plan[:1500]

@@ -10,9 +10,11 @@ The HTTP framing itself is out of engine scope (SURVEY.md §7 non-goals);
 layer.  It runs the pipeline once, through ``run_batch``: the ordered rows
 are collected inside the run, while its one persisted frame is still
 cached, and the type tags are read from the output schema alone, which
-starts no job.  Unlike the reference it is driver-light: the only collected
-object is the final normalized table of ONE payload (bounded by payload
-size, the same object the reference holds in pandas), not any intermediate.
+starts no job.  The payload's frame is built in the JVM and run in one
+partition: a request runs no Python worker and no exchange.  Unlike the
+reference it is driver-light: the only collected object is the final
+normalized table of ONE payload (bounded by payload size, the same object
+the reference holds in pandas), not any intermediate.
 """
 
 from __future__ import annotations

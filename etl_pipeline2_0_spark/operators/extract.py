@@ -97,12 +97,16 @@ def _explode_kind(detected: DataFrame, kind: str, blocks_col: str) -> DataFrame:
     """One row per detected block of one kind, with E11's ``source_index``.
 
     ``posexplode`` gives the 0-based per-document detection ordinal without a
-    shuffle; ``source_index`` is ``{kind}_{ordinal}``.
+    shuffle; ``source_index`` is ``{kind}_{ordinal}``.  The ``_outer`` form
+    plus a null-ordinal filter yields the same rows, but keeps Catalyst's
+    ``InferFiltersFromGenerate`` from adding a ``size(<blocks>) > 0`` filter
+    below the generator, which would evaluate the block array's whole detect
+    expression a second time.
     """
     return detected.select(
         "doc_id",
-        F.posexplode(blocks_col).alias("ordinal", "body"),
-    ).withColumns(
+        F.posexplode_outer(blocks_col).alias("ordinal", "body"),
+    ).where(F.col("ordinal").isNotNull()).withColumns(
         {
             "type": F.lit(kind),
             "source_index": F.concat_ws("_", F.lit(kind), F.col("ordinal")),

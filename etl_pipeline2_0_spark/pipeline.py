@@ -22,7 +22,9 @@ literal.
 
 Unlike the reference (eager, single-threaded, one file at a time), every
 stage here is a DataFrame transform over a *corpus* — one job processes a
-directory of any size, partitioned by file.
+directory of any size, partitioned by file.  A ``payloads`` run is the
+exception: the request bounds its size, so its frame goes to one partition
+before the persist, and the report and the ordered rows need no exchange.
 """
 
 from __future__ import annotations
@@ -92,8 +94,6 @@ def run_batch(
     """
     start = datetime.now(timezone.utc)
     if payloads is not None:
-        # documents_from_strings already yields one partition per payload,
-        # capped at cluster parallelism.
         docs, source_name = documents_from_strings(spark, payloads), "<payload>"
     elif input_path is not None:
         docs = ensure_min_parallelism(read_documents(spark, input_path))
@@ -103,9 +103,14 @@ def run_batch(
     else:
         raise ValueError("one of input_path / payloads / docs is required")
 
+    pre_drop = _extracted(spark, docs)
+    if payloads is not None:
+        # The request bounds the rows: in one partition, the report's
+        # groupBy and sorted_output's orderBy run with no exchange.
+        pre_drop = pre_drop.coalesce(1)
     # MEMORY_AND_DISK: extracted records are far smaller than raw input,
     # but spillable if not.
-    pre_drop = _extracted(spark, docs).persist(StorageLevel.MEMORY_AND_DISK)
+    pre_drop = pre_drop.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         report, items_by_type = infer_schema_report(pre_drop)
         normalized = normalize_union(

@@ -5,7 +5,8 @@ pipeline → ``{'success': True, 'data': [...], 'types': {...}}``; blank body
 → 400 ``{'error': 'No data provided'}``; handler failure → 500 with
 ``error``/``trace`` — app.py:61-62, 131-140).  Unlike the reference, a 500
 here carries ``error`` and an ``error_id``, never the traceback: the
-traceback goes to this module's log under that id.
+traceback goes to this module's log under that id.  A body longer than
+``MAX_BODY_BYTES`` is refused with 413 before it is read.
 
 The engine-side handler body lives in :mod:`etl_pipeline2_0_spark.api`;
 this module adds the missing listener with ``http.server`` only — no web
@@ -32,6 +33,10 @@ from etl_pipeline2_0_spark.api import process_payload
 from etl_pipeline2_0_spark.frontend import INDEX_HTML as _INDEX_HTML
 
 log = logging.getLogger(__name__)
+
+# Largest request body read; a longer Content-Length is answered 413 before
+# any of it is read.  The body is held in memory and handed to the JVM whole.
+MAX_BODY_BYTES = 8 * 1024 * 1024
 
 
 def _make_handler(spark: SparkSession):
@@ -84,6 +89,11 @@ def _make_handler(spark: SparkSession):
                         raise ValueError(length)
                 except ValueError:
                     self._send_json(400, {"error": "invalid Content-Length"})
+                    return
+                if length > MAX_BODY_BYTES:
+                    self._send_json(
+                        413, {"error": f"body exceeds {MAX_BODY_BYTES} bytes"}
+                    )
                     return
                 content = self.rfile.read(length).decode("utf-8", errors="replace")
                 if not content.strip():

@@ -14,8 +14,8 @@ file (S1) and a whole directory in one distributed job (S2);
 ``input_file_name()`` preserves per-file provenance.  S3 is the Structured
 Streaming file source (see ``streaming.watch``) — file-arrival-triggered
 micro-batch is exactly the reference's watch mode, minus the settle-sleep
-race (the file source only lists completed files).  S4 is a driver-side
-one-row DataFrame.
+race (the file source only lists completed files).  S4 builds its rows in
+the JVM, one per payload, so no Python worker runs for it.
 
 Charset note: Spark's text source decodes UTF-8 with replacement rather than
 raising, so the reference's Latin-1 *fallback* (a recovery path for its
@@ -82,13 +82,27 @@ def read_documents_stream(
 
 
 def documents_from_strings(spark: SparkSession, payloads: list[str]) -> DataFrame:
-    """S4: in-memory payloads (e.g. HTTP bodies) as a documents frame.
+    """S4: in-memory payloads (e.g. HTTP bodies) as a documents frame, with
+    ``doc_id`` ``payload_<i>``.
 
-    Partition count = payload count (capped at cluster parallelism): a
-    2-payload API call must not fan every downstream stage out to dozens of
-    empty tasks — on the latency-sensitive HTTP path scheduler overhead IS
-    the cost (one document can't split below one partition anyway)."""
-    rows = [(f"payload_{i}", p) for i, p in enumerate(payloads)]
-    slices = max(1, min(len(rows), spark.sparkContext.defaultParallelism))
-    rdd = spark.sparkContext.parallelize(rows, numSlices=slices)
-    return spark.createDataFrame(rdd, "doc_id string, content string")
+    The rows are built in the JVM: each payload crosses py4j once, into a
+    ``java.util.List<Row>`` that ``JavaSparkContext.parallelize`` slices
+    into ``min(n, defaultParallelism)`` partitions, and
+    ``createDataFrame(JavaRDD<Row>, StructType)`` wraps it.  The plan is a
+    ``Scan ExistingRDD`` whose lineage holds no ``PythonRDD``, so no Python
+    worker starts for any job over it.  A local relation (``VALUES`` or
+    ``createDataFrame(list)``) is avoided on purpose: Catalyst would fold
+    the whole detect chain into it and evaluate it on the driver,
+    interpreted, once per query."""
+    sc, jvm = spark.sparkContext, spark._jvm
+    rows = jvm.java.util.ArrayList(len(payloads))
+    for i, payload in enumerate(payloads):
+        cells = sc._gateway.new_array(jvm.java.lang.Object, 2)
+        cells[0], cells[1] = f"payload_{i}", payload
+        rows.add(jvm.org.apache.spark.sql.RowFactory.create(cells))
+    slices = max(1, min(len(payloads), sc.defaultParallelism))
+    jrdd = sc._jsc.parallelize(rows, slices)
+    schema = jvm.org.apache.spark.sql.types.StructType.fromDDL(
+        "doc_id string, content string"
+    )
+    return DataFrame(spark._jsparkSession.createDataFrame(jrdd, schema), spark)

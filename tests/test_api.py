@@ -127,6 +127,34 @@ def test_http_server_body_framing(spark):
         server.server_close()
 
 
+def test_http_server_refuses_oversized_body(spark, monkeypatch):
+    # A Content-Length over the limit is answered 413 before the body is
+    # read, so the handler never calls the pipeline.
+    import http.client
+    import json as _json
+
+    from etl_pipeline2_0_spark import server as server_mod
+
+    def unreachable(spark, payload):
+        raise AssertionError("an oversized body reached the pipeline")
+
+    monkeypatch.setattr(server_mod, "process_payload", unreachable)
+    server, _ = _served(spark)
+    host, port = server.server_address[0], server.server_address[1]
+    try:
+        conn = http.client.HTTPConnection(host, port, timeout=30)
+        conn.putrequest("POST", "/process")
+        conn.putheader("Content-Length", str(server_mod.MAX_BODY_BYTES + 1))
+        conn.endheaders()
+        resp = conn.getresponse()
+        assert resp.status == 413
+        assert str(server_mod.MAX_BODY_BYTES) in _json.load(resp)["error"]
+        conn.close()
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
 def test_http_server_500_hides_traceback(spark, monkeypatch, caplog):
     # A handler failure answers 500 with an error id; the traceback goes to
     # the server log under that id, never to the client.

@@ -6,6 +6,7 @@ import csv
 import glob
 import json
 import os
+import re
 import uuid
 
 from etl_pipeline2_0_spark.api import process_payload
@@ -16,7 +17,11 @@ from etl_pipeline2_0_spark.operators.schema_report import (
     frontend_type_tags,
     infer_schema_report,
 )
-from etl_pipeline2_0_spark.pipeline import count_by_type, run_batch
+from etl_pipeline2_0_spark.pipeline import _extracted, count_by_type, run_batch
+from etl_pipeline2_0_spark.sources.documents import (
+    documents_from_strings,
+    read_documents,
+)
 from tests.conftest import (
     EXPECTED_DATA_FIELDS,
     EXPECTED_ROWS,
@@ -180,8 +185,6 @@ def test_latin1_charset_read(spark, tmp_path):
     # to Latin-1 when strict UTF-8 decode fails; Spark's text source decodes
     # with the declared charset, so a known-Latin-1 corpus reads via the
     # explicit option and round-trips the accented bytes.
-    from etl_pipeline2_0_spark.sources.documents import read_documents
-
     p = tmp_path / "latin1.txt"
     content = "café au lait — prix: 3€ approximatif et détaillé"
     p.write_bytes("caf\xe9 au lait".encode("latin-1"))
@@ -225,10 +228,19 @@ def test_dotted_json_keys(spark, tmp_path):
     assert served["types"]["user.id"] == "number"
 
 
-def _jobs_and_leaked_cache(spark, call) -> tuple[int, set]:
-    """Spark jobs ``call`` runs, and the persisted RDDs it leaves behind."""
+def _run_counted(spark, call) -> tuple[int, set, list[str]]:
+    """Spark jobs ``call`` runs, the persisted RDDs it leaves behind, and
+    the final physical plans of the SQL executions it ran."""
     sc = spark.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keys())
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions() -> dict:
+        listed = store.executionsList()
+        found = (listed.apply(i) for i in range(listed.size()))
+        return {e.executionId(): e for e in found}
+
+    before_cache = set(sc._jsc.getPersistentRDDs().keys())
+    before_executions = set(executions())
     group = f"jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
@@ -237,28 +249,54 @@ def _jobs_and_leaked_cache(spark, call) -> tuple[int, set]:
         sc.setLocalProperty("spark.jobGroup.id", None)
     # Job-start events reach the status tracker through the listener bus.
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    leaked = set(sc._jsc.getPersistentRDDs().keys()) - before
-    return len(sc.statusTracker().getJobIdsForGroup(group)), leaked
+    leaked = set(sc._jsc.getPersistentRDDs().keys()) - before_cache
+    plans = [
+        e.physicalPlanDescription()
+        for i, e in executions().items()
+        if i not in before_executions
+    ]
+    return len(sc.statusTracker().getJobIdsForGroup(group)), leaked, plans
 
 
 def test_pipeline_runs_once_per_call(spark, golden_doc, tmp_path):
     # The API serves the rows run_batch collected from its own cache: it
     # must not run detect → extract → normalize a second time, and no call
-    # may leave its persisted frame behind.
-    payload_jobs, leaked = _jobs_and_leaked_cache(
+    # may leave its persisted frame behind.  A request's frame is one
+    # partition, so neither the report's groupBy nor the sort shuffles.
+    payload_jobs, leaked, plans = _run_counted(
         spark, lambda: process_payload(spark, golden_doc)
     )
     assert not leaked
-    batch_jobs, leaked = _jobs_and_leaked_cache(
+    assert any("HashAggregate" in p for p in plans)
+    assert any(re.search(r"\bSort [\[(]", p) for p in plans)
+    assert not [p for p in plans if "Exchange" in p]
+    batch_jobs, leaked, _ = _run_counted(
         spark, lambda: run_batch(spark, payloads=[golden_doc])
     )
     assert not leaked
     assert payload_jobs <= batch_jobs
-    assert payload_jobs <= 7
+    assert payload_jobs <= 4
     out = str(tmp_path / "out")
-    sink_jobs, leaked = _jobs_and_leaked_cache(
+    sink_jobs, leaked, _ = _run_counted(
         spark,
         lambda: run_batch(spark, payloads=[golden_doc], out_dir=out, use_rowstore=True),
     )
     assert not leaked
-    assert sink_jobs <= 11
+    assert sink_jobs <= 6
+
+
+def test_detect_evaluated_once_per_branch(spark, golden_doc, tmp_path):
+    # Exploding a block array must not add a ``size(<blocks>) > 0`` filter
+    # below the generator: that filter evaluates the branch's whole detect
+    # expression a second time.
+    (tmp_path / "doc.txt").write_text(golden_doc, encoding="utf-8")
+    sources = [
+        documents_from_strings(spark, [golden_doc]),
+        read_documents(spark, str(tmp_path)),
+        spark.createDataFrame([("d0", golden_doc)], "doc_id string, content string"),
+    ]
+    for docs in sources:
+        plan = _extracted(spark, docs)._jdf.queryExecution().executedPlan().toString()
+        filters = [line for line in plan.splitlines() if "Filter" in line]
+        assert filters, plan
+        assert not [line for line in filters if "size(" in line], plan

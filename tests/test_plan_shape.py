@@ -82,6 +82,9 @@ def test_detect_extract_no_driver_collect(spark, sf_dir):
     assert "CollectLimit" not in plan
     # Counting by type needs no second count of the corpus (no W1 cross join).
     assert "BroadcastNestedLoopJoin" not in plan
+    # Each branch's detect arrays are evaluated once: no size(<blocks>) > 0
+    # filter below the generator.
+    assert not [l for l in plan.splitlines() if "Filter" in l and "size(" in l]
 
 
 def test_minhash_candidates_equijoin(spark, sf_dir):
